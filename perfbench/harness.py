@@ -393,18 +393,20 @@ def median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
-def tail(xs: list[float]) -> tuple[float, float, int]:
-    """The highest percentile with at least ten samples beyond it.
+#: a tail needs this many samples beyond it
+TAIL_BEYOND = 10
 
-    Returns ``(value, percentile, n)``. With fewer than 21 samples no
-    percentile above the median has ten beyond it; the median rank is
-    used instead and the returned percentile says so."""
+
+def tail(xs: list[float]) -> Optional[tuple[float, float]]:
+    """The highest percentile with at least ten samples beyond it, as
+    ``(value, percentile)``; ``None`` when no percentile above the
+    median has ten samples beyond it (fewer than 21 samples)."""
     s = sorted(xs)
     n = len(s)
-    if n == 0:
-        raise ValueError("tail of no samples")
-    rank = max(n - 10, n // 2 + 1)  # 1-based; n - rank samples beyond
-    return s[rank - 1], 100.0 * rank / n, n
+    rank = n - TAIL_BEYOND  # 1-based; n - rank samples beyond
+    if rank <= n // 2:
+        return None
+    return s[rank - 1], 100.0 * rank / n
 
 
 def rmtree(path: str) -> None:

@@ -8,7 +8,7 @@ from __future__ import annotations
 #: name -> (unit, better, bound, what it is on each workload)
 END_TO_END = {
     "setup_s": ("s", "lower", 0.25,
-                "session start + warm-up + median of 3 initial loads"),
+                "session start + initial loads + warm-up"),
     "ops_per_s": ("1/s", "higher", 0.25,
                   "sync_batches: syncs; store_cdf_mix: store ops (reads, "
                   "writes, maintenance) — per second of client time"),
@@ -20,16 +20,12 @@ END_TO_END = {
                        "sync_batches: sync + point read of the synced "
                        "store; store_cdf_mix: freshness, upstream commit "
                        "returned -> summary commit visible"),
-    "latency_tail_ms": ("ms", "lower", 0.25,
-                        "tail of latency_p50_ms's samples"),
     "write_p50_ms": ("ms", "lower", 0.25,
                      "sync_batches: SyncPipeline.run; store_cdf_mix: "
                      "merge_into/update_where/delete_where/optimize_binpack"),
-    "write_tail_ms": ("ms", "lower", 0.25, "tail of write samples"),
     "read_p50_ms": ("ms", "lower", 0.25,
                     "sync_batches: point read of the synced store; "
                     "store_cdf_mix: get/eq/range/as-of/change-feed reads"),
-    "read_tail_ms": ("ms", "lower", 0.25, "tail of read samples"),
     "write_amp": ("ratio", "lower", 0.1,
                   "bytes added under store roots / logical bytes of the "
                   "rows the generator changed, inserted or deleted"),
@@ -43,10 +39,8 @@ END_TO_END = {
 ALIASES = {
     "sync_rows_per_s": ("rows_per_s", "sync_batches"),
     "sync_p50_ms": ("write_p50_ms", "sync_batches"),
-    "sync_tail_ms": ("write_tail_ms", "sync_batches"),
     "dml_ops_per_s": ("ops_per_s", "store_cdf_mix"),
     "freshness_p50_ms": ("latency_p50_ms", "store_cdf_mix"),
-    "freshness_tail_ms": ("latency_tail_ms", "store_cdf_mix"),
     "cdf_rows_per_s": ("rows_per_s", "store_cdf_mix"),
 }
 
@@ -79,8 +73,8 @@ PER_LAYER = {
     **{
         f"store.{op}_ms": ("ms", "lower", [(
             "write_p50_ms" if op in ("merge_into", "update_where",
-                                     "delete_where", "vacuum")
-            else "write_tail_ms" if op == "optimize_binpack"
+                                     "delete_where", "optimize_binpack",
+                                     "vacuum")
             else "read_p50_ms", _DML)])
         for op in ("get_document", "read_where_eq", "read_where",
                    "read_as_of", "change_feed", "merge_into",

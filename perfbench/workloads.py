@@ -15,6 +15,7 @@ from datetime import datetime, timedelta, timezone
 
 from perfbench import gen
 from perfbench.harness import (
+    TAIL_BEYOND,
     SparkCounters,
     SparkWork,
     Tracer,
@@ -32,10 +33,6 @@ SIZES = {
     "sync_batches": {"rows": 5_000},
     "store_cdf_mix": {"rows": 20_000, "groups": 64},
 }
-
-#: how many times the workload's initial load is repeated for setup_s
-SETUP_REPEATS = 3
-
 
 class Client:
     """Closed-loop client bookkeeping: timing, failures, counters.
@@ -94,13 +91,16 @@ class Client:
 
     # -- one timed operation ----------------------------------------------
 
-    def op(self, name: str, fn, kind: str = ""):
+    def op(self, name: str, fn, kind: str = "", walk: bool = True):
         """Run ``fn`` as one timed client op. Returns ``(result, ms)``;
         ``(None, None)`` when it raised (counted as a failure). Counters
-        and filesystem walks happen outside the timed interval."""
+        and filesystem walks happen outside the timed interval; with
+        ``walk=False`` the caller walks the store roots itself
+        (:meth:`account`), so the op can be followed at once by the
+        next one."""
         self.attempted += 1
         traced = self.traced
-        before = inodes(self.roots)
+        before = inodes(self.roots) if walk else None
         mark = self.counters.mark() if traced else None
         self.tracer.op_id = self.iteration
         t0 = time.perf_counter()
@@ -120,23 +120,32 @@ class Client:
             w = self.counters.since(mark)
             w.driver_gap_ms = ms - w.job_busy_ms
             self.work_by_op.setdefault(name, []).append(w)
-        fs = added(before, inodes(self.roots))
-        self.bytes_added += fs[1]
-        self.fs_by_op.setdefault(name, []).append(fs)
+        if walk:
+            self.account(name, before)
         self.sample("op." + name, ms)
         return out, ms
+
+    def account(self, name: str, before: dict, roots=None) -> None:
+        """Files and bytes added under ``roots`` (default: every store
+        root) since the ``before`` walk, charged to op ``name``."""
+        fs = added(before, inodes(self.roots if roots is None else roots))
+        self.bytes_added += fs[1]
+        self.fs_by_op.setdefault(name, []).append(fs)
 
     # -- reporting --------------------------------------------------------
 
     def latency(self, kind: str, out: dict, info: dict) -> None:
-        """``<kind>_p50_ms`` and ``<kind>_tail_ms`` from the samples."""
+        """``<kind>_p50_ms`` from the samples; the tail (highest
+        percentile with ten samples beyond it) goes to ``info`` when
+        there are enough samples to form one."""
         xs = self.samples.get(kind, [])
         if not xs:
             raise RuntimeError(f"no {kind} samples were taken")
-        value, pct, n = tail(xs)
         out[f"{kind}_p50_ms"] = median(xs)
-        out[f"{kind}_tail_ms"] = value
-        info[f"{kind}_tail"] = f"p{pct:.1f} of n={n}"
+        t = tail(xs)
+        info[f"{kind}_tail"] = (
+            f"p{t[1]:.1f} = {t[0]:.1f} ms of n={len(xs)}" if t else
+            f"not formed: n={len(xs)}, needs {2 * TAIL_BEYOND + 1}")
 
     def spark_work(self, names) -> tuple[SparkWork, int]:
         tot, n = SparkWork(), 0
@@ -343,6 +352,7 @@ def sync_batches(spark, work: str, seed: int, seconds: float, trace: bool):
             iteration(client, r * len(_STRATEGIES) + k)
     syncs = len(client.samples.get("write", []))
 
+    t0 = time.perf_counter()
     for kind, be in backends.items():
         _check_sync_store(client, be, kind, models[kind])
 
@@ -352,7 +362,7 @@ def sync_batches(spark, work: str, seed: int, seconds: float, trace: bool):
         be.vacuum_versions(keep_last=1)
         space.append(dir_bytes(be.root) / _compact_bytes(client, be.read(), kind))
 
-    out, info = {}, {"setup": setup_parts, "syncs": syncs}
+    out, info = {}, {"syncs": syncs, "checks_s": time.perf_counter() - t0}
     client.latency("latency", out, info)
     client.latency("write", out, info)
     client.latency("read", out, info)
@@ -402,18 +412,17 @@ def sync_batches(spark, work: str, seed: int, seconds: float, trace: bool):
 # store_cdf_mix
 # ---------------------------------------------------------------------------
 
-#: one cycle: each write kind once, each followed by the change reaching
-#: the rollup (freshness) and by three reads of the upstream store, then
-#: maintenance (optimize_binpack, vacuum). A run measures whole cycles,
-#: so op shares are identical across seeds and run lengths; the seed
-#: picks keys, ranges and sliver contents. Each write touches ~0.5% of
-#: rows.
+#: one cycle: each write once, each followed by draining the rollup
+#: stream (freshness); then each read once, against the state the three
+#: writes left; then maintenance (optimize_binpack, vacuum). No source
+#: gives this engine's op mix, so every op of the mix runs once per
+#: cycle (see README.md). A run measures whole cycles, so op shares are
+#: identical across seeds and run lengths; the seed picks keys, ranges
+#: and sliver contents. Each write touches ~0.5% of rows.
 _WRITE_CYCLE = ("merge_into", "update_where", "delete_where")
 _SLIVER = 0.005
 _READ_CYCLE = ("get_document", "read_where_eq", "read_where",
-               "get_document", "read_as_of", "read_where_eq",
-               "get_document", "change_feed", "read_where")
-_READS_PER_WRITE = len(_READ_CYCLE) // len(_WRITE_CYCLE)
+               "read_as_of", "change_feed")
 _WRITES = {"merge_into", "update_where", "delete_where",
            "optimize_binpack", "vacuum"}
 _READS = set(_READ_CYCLE)
@@ -463,15 +472,15 @@ def _load_kv_store(spark, root: str, rows, cdf: bool = False):
     return store
 
 
-def _dml_step(client: Client, st: _DMLState, op: str,
-              rng: random.Random) -> None:
-    """Run one op of the mix. The model is updated and the result
-    checked outside the timed interval."""
+def _read_step(client: Client, st: _DMLState, op: str,
+               rng: random.Random) -> None:
+    """Run one read of the mix; its result is checked against the model
+    outside the timed interval."""
     from far_finer_airtable_firestore_sync_spark.sources.store import (
         version_commit_ms,
     )
 
-    spark, store, t = client.spark, st.store, st.table
+    store, t = st.store, st.table
     name = "store." + op
     if op == "get_document":
         k = t.hot_key()
@@ -528,6 +537,17 @@ def _dml_step(client: Client, st: _DMLState, op: str,
         want = sorted(c for v in vs[lo_i + 1:hi_i + 1] for c in st.versions[v][1])
         client.check(op, sorted(tuple(r) for r in got), want)
         return
+    raise ValueError(f"unknown read {op}")
+
+
+def _write_step(client: Client, st: _DMLState, op: str,
+                rng: random.Random):
+    """Run one write of the mix. Returns ``(version_dir, finish)``, or
+    ``(None, None)`` when the write raised; ``finish()`` updates the
+    model and checks the result. The caller runs it once the change has
+    reached the rollup, so the write is followed at once by the drain."""
+    spark, store, t = client.spark, st.store, st.table
+    name = "store." + op
     if op == "merge_into":
         src, changes = t.sliver(_SLIVER)
         df = _kv_df(spark, src)
@@ -538,17 +558,21 @@ def _dml_step(client: Client, st: _DMLState, op: str,
             when_matched_delete="s.val < 0",
             when_not_matched_insert=True,
             cdf=True,
-        ), "write")
+        ), "write", walk=False)
         if ms is None:
-            return
-        client.logical_bytes += t.apply_sliver(src)
+            return None, None
         vd, counts = res
-        want = {"updated": sum(1 for c in changes.values() if c == "update"),
+
+        def finish() -> None:
+            client.logical_bytes += t.apply_sliver(src)
+            want = {
+                "updated": sum(1 for c in changes.values() if c == "update"),
                 "inserted": sum(1 for c in changes.values() if c == "insert"),
-                "deleted": sum(1 for c in changes.values() if c == "delete")}
-        client.check(op, {k: counts.get(k) for k in want}, want)
-        st.record(vd, sorted(changes.items()))
-        return
+                "deleted": sum(1 for c in changes.values() if c == "delete"),
+            }
+            client.check(op, {k: counts.get(k) for k in want}, want)
+            st.record(vd, sorted(changes.items()))
+        return vd, finish
     if op in ("update_where", "delete_where"):
         width = int(t.next_key * _SLIVER)
         lo = rng.randrange(1, t.next_key - width)
@@ -557,31 +581,33 @@ def _dml_step(client: Client, st: _DMLState, op: str,
         pred = f"k between {lo} and {hi}"
         if op == "update_where":
             res, ms = client.op(name, lambda: store.update_where(
-                pred, {"val": "val + 1"}, cdf=True), "write")
+                pred, {"val": "val + 1"}, cdf=True), "write", walk=False)
         else:
-            res, ms = client.op(
-                name, lambda: store.delete_where(pred, cdf=True), "write")
+            res, ms = client.op(name, lambda: store.delete_where(
+                pred, cdf=True), "write", walk=False)
         if ms is None:
-            return
+            return None, None
         vd, n = res
-        if op == "update_where":
-            client.check(op, n, len(hit))
-        # delete_where returns the version's total masked rows; the
-        # deleted rows are checked by later reads and the final check
-        client.check(op + ".new_version", vd in st.versions, not hit)
-        kind = "update" if op == "update_where" else "delete"
-        for k in hit:
-            grp, val, note = t.rows[k]
-            if kind == "update":
-                t.rows[k] = (grp, val + 1, note)
-                client.logical_bytes += gen.kv_bytes(k, grp, val + 1, note)
-            else:
-                del t.rows[k]
-                client.logical_bytes += gen.kv_bytes(k, grp, val, note)
-        if hit:
-            st.record(vd, [(k, kind) for k in hit])
-        return
-    raise ValueError(f"unknown op {op}")
+
+        def finish() -> None:
+            if op == "update_where":
+                client.check(op, n, len(hit))
+            # delete_where returns the version's total masked rows; the
+            # deleted rows are checked by later reads and the final check
+            client.check(op + ".new_version", vd in st.versions, not hit)
+            kind = "update" if op == "update_where" else "delete"
+            for k in hit:
+                grp, val, note = t.rows[k]
+                if kind == "update":
+                    t.rows[k] = (grp, val + 1, note)
+                    client.logical_bytes += gen.kv_bytes(k, grp, val + 1, note)
+                else:
+                    del t.rows[k]
+                    client.logical_bytes += gen.kv_bytes(k, grp, val, note)
+            if hit:
+                st.record(vd, [(k, kind) for k in hit])
+        return vd, finish
+    raise ValueError(f"unknown write {op}")
 
 
 def _maintain(client: Client, st: _DMLState) -> None:
@@ -667,14 +693,10 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
         raise RuntimeError("the store_cdf source needs pyspark >= 4")
 
     table = gen.KVTable(seed, size["rows"], size["groups"])
-    load_s = []
-    for r in range(SETUP_REPEATS):
-        root = os.path.join(work, "stores", f"up{r}")
-        t0 = time.perf_counter()
-        upstream = _load_kv_store(spark, root, table.as_rows(), cdf=True)
-        load_s.append(time.perf_counter() - t0)
-        if r < SETUP_REPEATS - 1:
-            rmtree(root)
+    t0 = time.perf_counter()
+    upstream = _load_kv_store(spark, os.path.join(work, "stores", "up"),
+                              table.as_rows(), cdf=True)
+    load_s = [time.perf_counter() - t0]
     st = _DMLState(upstream, table)
     st.record(upstream.current_version_dir(), [])
     summary = DocumentStore(spark, os.path.join(work, "stores", "summary"), "grp")
@@ -693,22 +715,25 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
                             "grp", "n", {"s": "val"}, _QUERY, stats=stats)
     seen: set = set()
 
-    def fresh(c: Client) -> None:
-        """Freshness of the upstream commit the last op made: from that
-        op returning until the summary commit is visible. Then check the
-        summary against the model (untimed)."""
-        n_stats = len(stats)
-        head = upstream.current_version_dir()
+    def drain(c: Client) -> bool:
+        """Freshness of the commit the write just made: from the write
+        returning until the summary commit is visible. The caller runs
+        this straight after the write, before any work of its own."""
         committed = c.last_end
 
-        def drain():
+        def visible():
             query.processAllAvailable()
             return summary.last_txn(_QUERY)
 
-        _txn, ms = c.op("stream.process", drain, "stream")
+        _txn, ms = c.op("stream.process", visible, "stream", walk=False)
         if ms is None:
-            return
+            return False
         c.sample("latency", (c.last_end - committed) * 1000.0)
+        return True
+
+    def after_drain(c: Client, n_stats: int, head: str) -> None:
+        """Untimed: the epochs' progress, and the summary against the
+        model."""
         progress = _new_progress(query, seen)
         n_rows = sum(p["numInputRows"] for p in progress)
         c.rows_done += n_rows
@@ -725,17 +750,26 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
                 c.tracer.count("ivm.groups", sum(
                     s.get(k, 0) for k in ("updated", "inserted", "deleted")))
 
-    def cycle(c: Client, writes=_WRITE_CYCLE) -> None:
-        for i, w in enumerate(writes):
+    def write(c: Client, w: str) -> None:
+        c.next_iteration()
+        head = upstream.current_version_dir()
+        n_stats = len(stats)
+        up0, sum0 = inodes([upstream.root]), inodes([summary.root])
+        vd, finish = _write_step(c, st, w, rng)
+        drained = vd is not None and vd != head and drain(c)
+        c.account("store." + w, up0, [upstream.root])
+        if finish is not None:
+            finish()
+        if drained:
+            c.account("stream.process", sum0, [summary.root])
+            after_drain(c, n_stats, vd)
+
+    def cycle(c: Client) -> None:
+        for w in _WRITE_CYCLE:
+            write(c, w)
+        for r in _READ_CYCLE:
             c.next_iteration()
-            head = upstream.current_version_dir()
-            _dml_step(c, st, w, rng)
-            if upstream.current_version_dir() != head:
-                fresh(c)
-            k = _READS_PER_WRITE * i
-            for r in _READ_CYCLE[k:k + _READS_PER_WRITE]:
-                c.next_iteration()
-                _dml_step(c, st, r, rng)
+            _read_step(c, st, r, rng)
         _maintain(c, st)
         query.processAllAvailable()  # the pack's empty change set
         _new_progress(query, seen)
@@ -743,22 +777,28 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
     try:
         query.processAllAvailable()  # bootstrap epoch: the initial load
         _new_progress(query, seen)
+        # warm-up: one whole untimed cycle, so every op of the mix has
+        # run once before timing starts
         warm = Client(spark, work, False)
         warm.roots = client.roots
-        cycle(warm, _WRITE_CYCLE[:1])
+        t1 = time.perf_counter()
+        cycle(warm)
         client.failures += ["warmup " + f for f in warm.failures]
-        setup_parts = {"warmup_s": time.perf_counter() - t0, "load_s": load_s}
+        t2 = time.perf_counter()
+        setup_parts = {"warmup_s": t2 - t0, "load_s": load_s,
+                       "warmup_cycle_s": t2 - t1}
 
         cycles = 0
         for _i in _timed_loop(client, seconds):
             cycle(client)
             cycles += 1
+        t0 = time.perf_counter()
         space, dead = _space_sample(client, st, summary)
         _full_check(client, st, summary)
     finally:
         query.stop()
 
-    out, info = {}, {"cycles": cycles}
+    out, info = {}, {"cycles": cycles, "checks_s": time.perf_counter() - t0}
     client.latency("latency", out, info)
     client.latency("write", out, info)
     client.latency("read", out, info)
