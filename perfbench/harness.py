@@ -129,6 +129,20 @@ def stop_session(spark) -> None:
                 proc.wait(timeout=60)
 
 
+def driver_mem_mb(spark) -> float:
+    """Memory the driver holds at the end of a run: this Python
+    process's peak resident set plus the JVM's heap still live after a
+    full GC and its non-heap memory in use (metaspace, code cache).
+
+    Unlike the JVM's peak resident set, this does not follow when G1
+    chose to grow the heap, which varies run to run with host speed."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    mx.gc()
+    jvm = mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()
+    py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    return py_kb / 1024.0 + jvm / 2**20
+
+
 def peak_rss_mb() -> float:
     """Peak resident set of this Python process plus the driver JVM."""
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss

@@ -32,7 +32,9 @@ END_TO_END = {
     "space_amp": ("ratio", "lower", 0.05,
                   "store-root bytes at the end / one compact parquet "
                   "write of the live snapshot"),
-    "peak_rss_mb": ("MB", "lower", 0.25, "driver JVM + Python peak RSS"),
+    "driver_mem_mb": ("MB", "lower", 0.25,
+                      "Python peak RSS + JVM heap live after a full GC + "
+                      "JVM non-heap in use, at the end of the run"),
 }
 
 #: workload-specific names -> (metric, workload)

@@ -82,7 +82,8 @@ def main(argv=None) -> int:
         client.tracer.unwrap_all()
         e2e["setup_s"] = (session_s + sum(setup["load_s"])
                           + setup["warmup_s"])
-        e2e["peak_rss_mb"] = harness.peak_rss_mb()
+        e2e["driver_mem_mb"] = harness.driver_mem_mb(spark)
+        peak_rss = harness.peak_rss_mb()
     except Exception:
         traceback.print_exc()
         return 1
@@ -111,6 +112,8 @@ def main(argv=None) -> int:
     e2e_units = {k: v[0] for k, v in metrics.END_TO_END.items()}
     print("end-to-end:")
     _print_metrics(e2e, e2e_units)
+    print(f"  peak_rss_mb = {peak_rss:.6g} MB (JVM + Python; follows G1 "
+          f"heap growth, so not a benchmark metric)")
     print(f"  error_rate = {failed / attempted:.6g} ratio "
           f"({failed} of {attempted} ops failed or mismatched)")
     for alias, (name, wl) in metrics.ALIASES.items():
