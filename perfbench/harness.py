@@ -75,6 +75,8 @@ def build_session(work: str):
     # run stays inside the work directory
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
+    # nor does spark-submit's launcher JVM write an hsperfdata file
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     t0 = time.perf_counter()
     from pyspark.sql import SparkSession
 

@@ -53,6 +53,8 @@ class Client:
         self.attempted = 0
         self.failures: list[str] = []
         self.samples: dict[str, list[float]] = {}
+        # kind -> group (an op, or a strategy's store) -> samples
+        self.groups: dict[str, dict[str, list[float]]] = {}
         self.by_tracing: dict[bool, dict[str, list[float]]] = {
             True: {}, False: {}}
         self.work_by_op: dict[str, list[SparkWork]] = {}
@@ -86,18 +88,22 @@ class Client:
             return False
         return True
 
-    def sample(self, kind: str, ms: float) -> None:
+    def sample(self, kind: str, ms: float, group: str = "") -> None:
         self.samples.setdefault(kind, []).append(ms)
+        if group:
+            self.groups.setdefault(kind, {}).setdefault(group, []).append(ms)
 
     # -- one timed operation ----------------------------------------------
 
-    def op(self, name: str, fn, kind: str = "", walk: bool = True):
+    def op(self, name: str, fn, kind: str = "", walk: bool = True,
+           group: str = ""):
         """Run ``fn`` as one timed client op. Returns ``(result, ms)``;
         ``(None, None)`` when it raised (counted as a failure). Counters
         and filesystem walks happen outside the timed interval; with
         ``walk=False`` the caller walks the store roots itself
         (:meth:`account`), so the op can be followed at once by the
-        next one."""
+        next one. ``group`` (default: ``name``) is the op's group
+        within ``kind`` (see :meth:`latency`)."""
         self.attempted += 1
         traced = self.traced
         before = inodes(self.roots) if walk else None
@@ -114,7 +120,7 @@ class Client:
         ms = (self.last_end - t0) * 1000.0
         if kind:
             self.timed_s += ms / 1000.0
-            self.sample(kind, ms)
+            self.sample(kind, ms, group or name)
             self.by_tracing[traced].setdefault(name, []).append(ms)
         if traced:
             w = self.counters.since(mark)
@@ -135,13 +141,24 @@ class Client:
     # -- reporting --------------------------------------------------------
 
     def latency(self, kind: str, out: dict, info: dict) -> None:
-        """``<kind>_p50_ms`` from the samples; the tail (highest
-        percentile with ten samples beyond it) goes to ``info`` when
-        there are enough samples to form one."""
+        """``<kind>_ms``: the mean over the kind's groups of each
+        group's median latency. The groups of a kind differ in cost
+        (a merge's epoch takes twice an update's), so the median of
+        all samples sits on the boundary between slow and fast groups
+        and jumps between them from run to run; each group's median
+        does not. ``info`` gets the per-group medians, the median of
+        all samples and the tail (highest percentile with ten samples
+        beyond it) when there are enough samples to form one."""
         xs = self.samples.get(kind, [])
-        if not xs:
+        groups = self.groups.get(kind, {})
+        if not xs or not groups:
             raise RuntimeError(f"no {kind} samples were taken")
-        out[f"{kind}_p50_ms"] = median(xs)
+        out[f"{kind}_ms"] = (sum(median(v) for v in groups.values())
+                             / len(groups))
+        info[f"{kind}_groups"] = {
+            g: f"p50 {median(v):.1f} ms of n={len(v)}"
+            for g, v in sorted(groups.items())}
+        info[f"{kind}_p50_all"] = f"{median(xs):.1f} ms of n={len(xs)}"
         t = tail(xs)
         info[f"{kind}_tail"] = (
             f"p{t[1]:.1f} = {t[0]:.1f} ms of n={len(xs)}" if t else
@@ -210,6 +227,10 @@ _STRATEGIES = (
     ("SOFT_DELETE", "soft_delete"),
     ("VERSIONED_CHECKSUM", "versioned"),
 )
+
+#: live keys point-read from each store after its sync (the same keys
+#: for every store of a step); ``latency`` pairs the sync with the first
+_READS_PER_SYNC = 4
 
 
 def _sync_spec(update_type, version: int):
@@ -314,26 +335,28 @@ def sync_batches(spark, work: str, seed: int, seconds: float, trace: bool):
             step["rows"] = len(rows)
             step["df"] = spark.createDataFrame(rows, gen.SYNC_SCHEMA)
             step["probe"] = random.Random(seed * 1000 + step["version"]).sample(
-                sorted(table.live), 3)
+                sorted(table.live), _READS_PER_SYNC)
         backend, version, df = backends[kind], step["version"], step["df"]
         _res, sync_ms = c.op(
             "pipeline.run",
             lambda: sync_once(backend, UpdateType[ut_name], version, df),
-            "write",
+            "write", group=kind,
         )
         if sync_ms is None:
             return
         c.rows_done += step["rows"]
         c.logical_bytes += step["touched"]
         models[kind].apply(table.live)
-        key = step["probe"][i % 3]
-        rows, read_ms = c.op(
-            "pipeline.point_read",
-            lambda: backend.read().filter(F.col("Name") == key).collect(),
-            "read",
-        )
-        if read_ms is not None:
-            c.sample("latency", sync_ms + read_ms)
+        for n, key in enumerate(step["probe"]):
+            rows, read_ms = c.op(
+                "pipeline.point_read",
+                lambda: backend.read().filter(F.col("Name") == key).collect(),
+                "read", group=kind,
+            )
+            if read_ms is None:
+                continue
+            if n == 0:
+                c.sample("latency", sync_ms + read_ms, kind)
             _point_read_check(c, rows, kind, key, models[kind])
 
     # warm-up: one untimed generator step through every store
@@ -715,10 +738,11 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
                             "grp", "n", {"s": "val"}, _QUERY, stats=stats)
     seen: set = set()
 
-    def drain(c: Client) -> bool:
-        """Freshness of the commit the write just made: from the write
-        returning until the summary commit is visible. The caller runs
-        this straight after the write, before any work of its own."""
+    def drain(c: Client, w: str) -> bool:
+        """Freshness of the commit write ``w`` just made: from the
+        write returning until the summary commit is visible. The caller
+        runs this straight after the write, before any work of its
+        own."""
         committed = c.last_end
 
         def visible():
@@ -728,7 +752,7 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
         _txn, ms = c.op("stream.process", visible, "stream", walk=False)
         if ms is None:
             return False
-        c.sample("latency", (c.last_end - committed) * 1000.0)
+        c.sample("latency", (c.last_end - committed) * 1000.0, w)
         return True
 
     def after_drain(c: Client, n_stats: int, head: str) -> None:
@@ -756,7 +780,7 @@ def store_cdf_mix(spark, work: str, seed: int, seconds: float, trace: bool):
         n_stats = len(stats)
         up0, sum0 = inodes([upstream.root]), inodes([summary.root])
         vd, finish = _write_step(c, st, w, rng)
-        drained = vd is not None and vd != head and drain(c)
+        drained = vd is not None and vd != head and drain(c, w)
         c.account("store." + w, up0, [upstream.root])
         if finish is not None:
             finish()
