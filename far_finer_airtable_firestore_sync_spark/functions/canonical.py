@@ -34,8 +34,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 SPARK = "spark"
 DUCKDB = "duckdb"
@@ -206,11 +204,6 @@ def checksum_sql(
 ) -> str:
     """SQL expression: MD5 hex of the canonical row JSON (row checksum D2)."""
     return f"md5({canonical_row_sql(fields, dialect, col_prefix)})"
-
-
-def checksum_col(fields: tuple[Field, ...] | list[Field]) -> Column:
-    """Spark Column for the row checksum — fully codegen'd, no UDF."""
-    return F.expr(checksum_sql(fields, SPARK))
 
 
 def table_json_sql(

@@ -18,7 +18,7 @@ from typing import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from far_finer_airtable_firestore_sync_spark.functions.canonical import DUCKDB, SPARK
+from far_finer_airtable_firestore_sync_spark.functions.canonical import SPARK
 
 #: Airtable field type -> canonical Field kind after conversion.
 CONVERTED_KIND = {
@@ -136,18 +136,3 @@ def typed_projection_with_quarantine(
     good = typed_projection(df.filter(~any_bad), catalog)
     quarantine = df.filter(any_bad).withColumn("_bad_fields", reasons)
     return good, quarantine
-
-
-def typed_projection_sql(
-    columns: list[str],
-    catalog: Mapping[str, str],
-    relation: str,
-    dialect: str = DUCKDB,
-) -> str:
-    """Equivalent SQL text of :func:`typed_projection` for the oracle."""
-    parts = []
-    q = "`" if dialect == SPARK else '"'
-    for name in columns:
-        at_type = catalog.get(name, "singleLineText")
-        parts.append(f"{convert_sql(q + name + q, at_type, dialect)} as {q}{name}{q}")
-    return f"select {', '.join(parts)} from {relation}"

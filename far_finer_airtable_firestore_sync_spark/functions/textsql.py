@@ -403,19 +403,6 @@ def char_bigrams(col: str, dialect: str) -> str:
     return grams
 
 
-def minhash_signature(
-    col: str, n: int, seeds: int, dialect: str, max_chars: int | None = 256
-) -> list[str]:
-    """K minhash values: for seed s, min over shingles of
-    md5('s:'||shingle) — lexicographic min of hex strings, portable."""
-    sh = shingles(col, n, dialect, max_chars)
-    out = []
-    for s in range(seeds):
-        hashed = ltransform(sh, f"x -> md5('{s}:' || x)", dialect)
-        out.append(lmin(hashed, dialect))
-    return out
-
-
 #: modulus for the Kirsch-Mitzenmacher hash family (< 2^56 so the
 #: 14-hex-digit operands never overflow int64 pre-reduction)
 KM_MOD = 72057594037927931
@@ -835,12 +822,6 @@ def xxh64_unsigned(s: str) -> str:
         f"(case when ({s}) < 0 then cast(({s}) as hugeint) + {_M64} "
         f"else cast(({s}) as hugeint) end)"
     )
-
-
-def render_lateral(steps: list) -> str:
-    """steps [(name, expr), ...] -> a select-list fragment relying on
-    DuckDB lateral column aliases."""
-    return ", ".join(f"{expr} as {name}" for name, expr in steps)
 
 
 def stage_steps(steps: list) -> list:

@@ -22,14 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def violation_expr(rules: list[tuple[str, str]]) -> str:
-    """CASE chain assigning the first violated rule name, else NULL.
-
-    Shared with the DuckDB oracle via :func:`violation_sql` — both
-    engines evaluate the identical text."""
-    return violation_sql(rules)
-
-
 def violation_sql(rules: list[tuple[str, str]]) -> str:
     # Rule names are inert labels, not SQL — escape quotes so a name
     # like "can't parse" renders as a valid string literal in BOTH

@@ -731,8 +731,3 @@ def get_strategy(update_type: UpdateType) -> StrategyFn:
     if fn is None:
         raise ValueError(f"Unsupported update type: {update_type}")
     return fn
-
-
-def register_strategy(update_type: UpdateType, fn: StrategyFn) -> None:
-    """Extension point (lib/UpdateStrategies.py:549-551)."""
-    _STRATEGIES[update_type] = fn

@@ -536,13 +536,14 @@ class TransactionalParquetBackend:
         import shutil
 
         from far_finer_airtable_firestore_sync_spark.sources.store import (
+            _version_reader,
             diff_frames,
             read_with_deletion_vectors,
         )
 
         ch = os.path.join(out, "_changes")
         shutil.rmtree(ch, ignore_errors=True)
-        new_df = self.spark.read.parquet(out)
+        new_df = _version_reader(self.spark, out).parquet(out)
         if base_rec is None:
             cols = [c for c in new_df.columns if c != self.key_col]
             types = dict(new_df.dtypes)

@@ -51,16 +51,83 @@ _CHANGES_DIR = "_changes"
 _MIXED_SCHEMA_MARKER = "_mixed_schema"
 
 
+#: footer key under which Spark's parquet writer records the row
+#: schema — the very string Spark's own schema inference deserializes
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _version_reader(spark: SparkSession, version_dir: str):
-    """The parquet reader for a committed version: footer-merging
-    when the version is marked mixed-schema (see
-    :data:`_MIXED_SCHEMA_MARKER`), plain otherwise — mergeSchema reads
-    every footer, which is wasted driver work on the overwhelmingly
-    common uniform version."""
-    reader = spark.read
+    """The ONE parquet reader for a committed directory (a version, a
+    ``_deletion_vectors`` / ``_changes`` sidecar, or a single file),
+    with the schema resolved ON THE DRIVER so building the frame runs
+    no Spark job. An un-schema'd ``spark.read.parquet(dir)`` first runs
+    a one-task inference job that reads one footer; here that footer
+    is read with pyarrow (~1 ms) and its Spark row schema pinned via
+    ``spark.read.schema`` — the same schema, made nullable exactly as
+    file-source inference makes it (Delta keeps the schema in table
+    metadata for the same reason). Versions are immutable, so there is
+    nothing to cache or invalidate.
+
+    A deletion-vector sidecar has a fixed schema. Spark's inference is
+    kept only where one footer cannot be trusted: a version marked
+    mixed-schema (:data:`_MIXED_SCHEMA_MARKER`, every footer merged via
+    ``mergeSchema``), a hive-partitioned directory (partition-column
+    types come from path discovery) and a footer without Spark's row
+    schema (a non-Spark writer)."""
+    if os.path.basename(os.path.normpath(version_dir)) == _DV_DIR:
+        return spark.read.schema(_DV_SCHEMA)
     if os.path.exists(os.path.join(version_dir, _MIXED_SCHEMA_MARKER)):
-        reader = reader.option("mergeSchema", "true")
-    return reader
+        return spark.read.option("mergeSchema", "true")
+    schema = _footer_schema(version_dir)
+    if schema is None:
+        return spark.read
+    return spark.read.schema(schema)
+
+
+def _footer_schema(path: str) -> Optional[T.StructType]:
+    """Spark's row schema from the footer of ``path`` (a file) or of
+    the first data file of the flat directory ``path`` — None when the
+    directory holds partition subdirectories or no data file, or the
+    footer carries no parseable Spark schema."""
+    import pyarrow.parquet as pq
+
+    if os.path.isfile(path):
+        first = path
+    else:
+        # Spark's reader skips the same hidden/sidecar names
+        names = sorted(
+            n for n in os.listdir(path) if not n.startswith(("_", "."))
+        )
+        if not names or any(
+            os.path.isdir(os.path.join(path, n)) for n in names
+        ):
+            return None
+        first = os.path.join(path, names[0])
+    raw = (pq.read_metadata(first).metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    try:
+        schema = T.StructType.fromJson(json.loads(raw))
+    except (ValueError, LookupError, TypeError, ImportError):
+        return None  # a type this pyspark cannot parse: let Spark infer
+    return _as_nullable(schema)
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable —
+    what Spark's file sources do to an inferred schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
 
 
 def _new_version_dir_name(epoch_ms: int) -> str:
@@ -104,8 +171,10 @@ def _run_concurrently(*thunks) -> None:
     order-independent writes (the deletion-vector no-op check and the
     mask-before-append contract are satisfied before these run: the
     one-pass positions forms never scan the commit directory). The
-    first failure propagates after all thunks finish — the caller's
-    directory-cleanup guard then sees no in-flight writer."""
+    first failure (in submission order) propagates after all thunks
+    finish — the caller's directory-cleanup guard then sees no
+    in-flight writer — carrying every other thunk's failure as a
+    note, so no diagnostic is lost."""
     if not thunks:
         return
     if len(thunks) == 1:
@@ -115,8 +184,13 @@ def _run_concurrently(*thunks) -> None:
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
-    for f in futures:
-        f.result()
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(
+                f"also failed concurrently: {type(other).__name__}: {other}"
+            )
+        raise errors[0]
 
 
 class DocumentStore:
@@ -282,7 +356,7 @@ class DocumentStore:
                 raise
         if cdf:
             try:
-                new_df = self.spark.read.parquet(out)
+                new_df = _version_reader(self.spark, out).parquet(out)
                 if prev is None:
                     cols = [
                         c for c in new_df.columns if c != self.key_col
@@ -2305,6 +2379,11 @@ def prune_files_by_bloom(
 
 
 _DV_DIR = "_deletion_vectors"
+#: every deletion-vector sidecar's row shape (see write_deletion_vectors)
+_DV_SCHEMA = T.StructType([
+    T.StructField("file_path", T.StringType()),
+    T.StructField("row_index", T.LongType()),
+])
 
 
 def _dv_rel_expr(version_dir: str, path_col: str) -> F.Column:
@@ -2414,6 +2493,12 @@ def _version_live_rows(version_dir: str) -> int:
             return int(json.load(fh)["live_rows"])
     except (OSError, ValueError, KeyError, TypeError):
         pass
+    # a crash mid DV swap must not be counted as "no mask" (the masked
+    # readers self-heal the same way)
+    try:
+        _dv_recover_interrupted_swap(version_dir)
+    except OSError:
+        pass  # a concurrent reader won the recovery rename
     n = 0
     for root, dirs, names in os.walk(version_dir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
@@ -2580,7 +2665,7 @@ def write_deletion_vectors(
         # directory (covers a legacy sidecar written in place), then
         # against the predecessor it may have been linked from
         fp = _dv_rel_expr(version_dir, "file_path")
-        existing = spark.read.parquet(out).select(
+        existing = _version_reader(spark, out).parquet(out).select(
             fp.alias("file_path"), "row_index"
         )
         if legacy_dir is not None:
@@ -2602,6 +2687,16 @@ def write_deletion_vectors(
     if total == 0 and not has_existing:
         shutil.rmtree(tmp)
         return 0
+    # the mask is about to change this version's LIVE row count — drop
+    # any cached count BEFORE the swap (the free-function DV form writes
+    # into published versions, so the immutability argument
+    # _version_live_rows leans on does not cover this one mutation): a
+    # crash between the renames then costs at most one re-walk, never a
+    # stale count
+    try:
+        os.remove(os.path.join(version_dir, _LIVE_ROWS_CACHE))
+    except OSError:
+        pass
     if has_existing:
         old = out + ".old-" + uuid.uuid4().hex[:8]
         os.rename(out, old)
@@ -2609,14 +2704,6 @@ def write_deletion_vectors(
         shutil.rmtree(old)
     else:
         os.rename(tmp, out)
-    # the mask changed this version's LIVE row count — drop any cached
-    # count (the free-function DV form writes into published versions,
-    # so the immutability argument _version_live_rows leans on does
-    # not cover this one mutation; round 12)
-    try:
-        os.remove(os.path.join(version_dir, _LIVE_ROWS_CACHE))
-    except OSError:
-        pass
     return total
 
 
@@ -2793,7 +2880,7 @@ def binpack_build(
     # anti-joins the (bounded) rewrite set — never a driver IN-list.
     dv_src = os.path.join(src, _DV_DIR)
     if os.path.isdir(dv_src) and big:
-        dv = spark.read.parquet(dv_src).select(
+        dv = _version_reader(spark, dv_src).parquet(dv_src).select(
             _dv_rel_expr(src, "file_path").alias("file_path"),
             "row_index",
         )
@@ -2875,7 +2962,7 @@ def _masked_scan_with_positions(
             pass  # a concurrent reader won the recovery rename
         if not os.path.isdir(dv_path):
             return data
-    dv = spark.read.parquet(dv_path).select(
+    dv = _version_reader(spark, dv_path).parquet(dv_path).select(
         _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
         F.col("row_index").alias("_ffs_dv_ri"),
     )
@@ -2917,7 +3004,7 @@ def _apply_deletion_vectors(
                 f"column {reserved!r} is reserved by the deletion-vector "
                 "read path; rename it in the snapshot"
             )
-    dv = spark.read.parquet(dv_path).select(
+    dv = _version_reader(spark, dv_path).parquet(dv_path).select(
         _dv_rel_expr(version_dir, "file_path").alias("_ffs_dv_fp"),
         F.col("row_index").alias("_ffs_dv_ri"),
     )

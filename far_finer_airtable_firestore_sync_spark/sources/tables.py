@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from far_finer_airtable_firestore_sync_spark.sources.store import _version_reader
+
 
 @dataclass(frozen=True)
 class View:
@@ -37,7 +39,8 @@ class View:
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1: full table scan of a fixture table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return _version_reader(spark, path).parquet(path)
 
 
 def read_view(

@@ -25,7 +25,10 @@ from far_finer_airtable_firestore_sync_spark.functions import textsql as tx
 from far_finer_airtable_firestore_sync_spark.config import SyncSpec, UpdateType
 from far_finer_airtable_firestore_sync_spark.functions.canonical import Field
 from far_finer_airtable_firestore_sync_spark.operators.strategies import get_strategy
-from far_finer_airtable_firestore_sync_spark.sources.store import DocumentStore
+from far_finer_airtable_firestore_sync_spark.sources.store import (
+    DocumentStore,
+    _version_reader,
+)
 
 #: Fallback stream schema for fixture generations whose events `ts` is
 #: NANOS parquet timestamps surfacing as int64 under ``nanosAsLong``
@@ -77,7 +80,7 @@ def read_event_stream(
         for f in _glob.glob(os.path.join(path, "*.parquet"))
     )
     if has_files:
-        schema = spark.read.parquet(path).schema
+        schema = _version_reader(spark, path).parquet(path).schema
     else:
         schema = EVENTS_SCHEMA
     reader = spark.readStream.schema(schema)
@@ -890,14 +893,16 @@ def cdf_extrema_sync(
         if store.current_version_dir() is None:
             # ALGEBRAIC bootstrap shortcut (round 12, guide §1.2): the
             # first epoch's feed starts at the upstream's genesis (the
-            # store feed always does; on the txn feed, a
-            # startingVersion past live history is outside the summary
-            # consumers' contract — it would under-maintain the
-            # incremental path identically), so the collapsed
-            # changelog nets to exactly the pinned snapshot and the
+            # store feed always does), so the collapsed changelog
+            # nets to exactly the pinned snapshot and the
             # bootstrap summary IS the direct aggregate of base_new —
             # the telescoping window, three maintenance joins and
             # recompute probe all cancel on an empty prior summary.
+            # A txn feed whose startingVersion is past genesis is
+            # outside the summary consumers' contract, and there the
+            # two paths DIFFER: this shortcut aggregates the whole
+            # pinned snapshot, while the incremental path would fold
+            # only the windowed changes into an empty summary.
             base_new = base_new_fn()
             assert base_new is not None  # the batch came from a commit
             store.commit(
